@@ -32,12 +32,17 @@ def pr(got: set, expected: set) -> tuple[float, float]:
 
 
 SEP = "\x1e"  # record separator — cannot occur in IRIs/NT lexicals
+NULL = "\x00"  # a NULL key part — NUL cannot occur in IRIs/NT terms
+
+
+def _part(x) -> str:
+    return NULL if x is None else str(x)
 
 
 def _key(k) -> str:
     if isinstance(k, tuple):
-        return SEP.join(str(x) for x in k)
-    return str(k)
+        return SEP.join(_part(x) for x in k)
+    return _part(k)
 
 
 def pr_spark(got_keys, expected: set) -> tuple[float, float, int]:
@@ -78,8 +83,9 @@ def _plain_keys(df, cols: list[str]):
         F.concat_ws(SEP, *[
             # concat_ws silently SKIPS nulls, which would alias rows
             # like ('x', NULL, 'y') and ('x', 'y', NULL); render nulls
-            # as 'None' to match str(None) on the Python _key side.
-            F.coalesce(F.col(c).cast("string"), F.lit("None"))
+            # as the NULL sentinel, like _key on the Python side (a
+            # printable stand-in such as 'None' could alias real data)
+            F.coalesce(F.col(c).cast("string"), F.lit(NULL))
             for c in cols])
         .alias("key"))
 
@@ -108,7 +114,8 @@ def _nt_keys(df, spec: list[tuple[str, str]]):
                 if kind == "nt":
                     vals = [terms.term_to_nt_py(v) for v in vals]
                 cols.append(vals)
-            keys = [SEP.join(str(v) for v in row) for row in zip(*cols)]
+            keys = [SEP.join(NULL if v is None else str(v) for v in row)
+                    for row in zip(*cols)]
             yield pa.RecordBatch.from_arrays(
                 [pa.array(keys, pa.string())], ["key"])
 
@@ -169,23 +176,15 @@ def collect_family_rows(res, oracle) -> list[tuple]:
 
 
 def install_closure_trace() -> list:
-    """Wrap taxonomy's transitive_closure so each call records
-    (iteration, frontier size) — the closure trace the 1M report
-    publishes. Costs one count() job per iteration; only used under
+    """Wrap the taxonomy's resumable closure (run_pipeline always passes
+    a closure dir) so each call records (iteration, frontier size) — the
+    closure trace the 1M report publishes. The commits already count
+    every frontier, so tracing costs no extra job; only used under
     --deep."""
     from yago4_spark.operators import closure as closure_mod
-    from yago4_spark.plans import taxonomy as taxonomy_mod
 
     trace: list[list[tuple[int, int]]] = []
-    orig = closure_mod.transitive_closure
     orig_res = closure_mod.transitive_closure_resumable
-
-    def traced(seeds, edges, max_iterations=closure_mod.MAX_ITERATIONS_DEFAULT,
-               on_iteration=None):
-        rec: list[tuple[int, int]] = []
-        trace.append(rec)
-        return orig(seeds, edges, max_iterations,
-                    on_iteration=lambda i, n: rec.append((i, n)))
 
     def traced_res(seeds, edges, checkpoint_dir,
                    max_iterations=closure_mod.MAX_ITERATIONS_DEFAULT,
@@ -195,7 +194,6 @@ def install_closure_trace() -> list:
         return orig_res(seeds, edges, checkpoint_dir, max_iterations,
                         on_iteration=lambda i, n: rec.append((i, n)))
 
-    taxonomy_mod.transitive_closure = traced
     closure_mod.transitive_closure_resumable = traced_res
     return trace
 
@@ -242,11 +240,7 @@ def main() -> None:
         df.count()
     t_pipe = time.time() - t0
     exchanges = (
-        {m["stage"]: m.get("plan_exchanges")
-         for m in (res.catalog.manifest(s)
-                   for s in sorted(os.listdir(res.catalog.root))
-                   if res.catalog.exists(s))
-         if m.get("plan_exchanges") is not None}
+        {m["stage"]: m["plan_exchanges"] for m in res.catalog.metrics()}
         if deep else None
     )
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from yago4_spark.catalog import count_exchanges as _count_exchanges
 from yago4_spark.fixtures import mini_wikidata_df
 from yago4_spark.sources.statements import StatementsTable
 
@@ -40,26 +41,6 @@ def test_bucketed_stmt_join_no_exchange(spark):
     got = {(r["stmt_key"], r["value_node"]) for r in rows}
     assert ("s42birth", "v42birth") in got
     spark.sql(f"DROP TABLE IF EXISTS {TABLE}")
-
-
-def _count_exchanges(df) -> int:
-    # Count each physical Exchange operator ONCE. executedPlan()
-    # .toString() re-prints shared subtrees at every consumer, so a
-    # substring count is weighted by DAG fan-out and flips when AQE's
-    # exchange-reuse decisions vary with session state (observed:
-    # "326768 vs 226560" on a ~40-node plan). Formatted mode lists
-    # every operator exactly once as "(n) Exchange".
-    import re
-
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted")
-    plan = df._jdf.queryExecution().explainString(mode)
-    # keep only the FINAL adaptive plan tree (the "== Initial Plan =="
-    # section re-lists pre-AQE operators); \bExchange excludes
-    # Reused/BroadcastExchange (no word boundary inside those tokens)
-    final_tree = plan.split("== Initial Plan ==")[0]
-    return len(re.findall(r"\bExchange \(\d+\)", final_tree))
 
 
 def test_build_facts_on_bucketed_store(spark, tmp_path_factory):

@@ -72,6 +72,8 @@ def test_resumable_closure_equivalence_and_resume(spark, tmp_path):
     iterations are not recomputed (their _MANIFEST files are untouched)
     — and completes to the identical result. A third run after
     convergence does zero join work (returns from the committed state).
+    Both commits report the same (iteration, frontier size) sequence:
+    the disk one across the interrupted run and its resume.
     """
     import json
     import os
@@ -86,12 +88,17 @@ def test_resumable_closure_equivalence_and_resume(spark, tmp_path):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)] + [(9, 4)], "src long, dst long")
     seeds = spark.createDataFrame([(0,)], "node long")
-    expect = {r["node"] for r in transitive_closure(seeds, edges).collect()}
+    in_memory, on_disk = [], []
+    expect = {r["node"] for r in transitive_closure(
+        seeds, edges,
+        on_iteration=lambda i, n: in_memory.append((i, n))).collect()}
 
     ckpt = str(tmp_path / "closure")
     # "crash" after 4 committed iterations (cap acts as the crash)
     try:
-        transitive_closure_resumable(seeds, edges, ckpt, max_iterations=4)
+        transitive_closure_resumable(
+            seeds, edges, ckpt, max_iterations=4,
+            on_iteration=lambda i, n: on_disk.append((i, n)))
         raise AssertionError("expected the iteration cap to trip")
     except ClosureDidNotConverge:
         pass
@@ -100,9 +107,11 @@ def test_resumable_closure_equivalence_and_resume(spark, tmp_path):
     mtimes = {d: os.path.getmtime(os.path.join(ckpt, d, "_MANIFEST.json"))
               for d in done}
 
-    got = {r["node"] for r in
-           transitive_closure_resumable(seeds, edges, ckpt).collect()}
+    got = {r["node"] for r in transitive_closure_resumable(
+        seeds, edges, ckpt,
+        on_iteration=lambda i, n: on_disk.append((i, n))).collect()}
     assert got == expect
+    assert on_disk == in_memory == [(i, 1) for i in range(9)] + [(9, 0)]
     # the pre-crash iterations were NOT recomputed
     for d in done:
         assert os.path.getmtime(

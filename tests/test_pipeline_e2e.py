@@ -125,3 +125,31 @@ def test_resume_skips_rebuild(result, spark, tmp_path_factory):
         assert res2.outputs["facts"].count() == result.outputs["facts"].count()
     finally:
         pl.build_taxonomy, pl.build_facts, pl.build_uri_mapping = original
+
+
+def test_resume_from_uri_work_dir(spark, tmp_path, monkeypatch):
+    """A ``file://`` work dir commits and resumes like a plain path: the
+    manifests are written and found through the Hadoop FileSystem, so a
+    second run reads every stage back instead of rebuilding it, and no
+    stray relative ``file:`` directory appears in the cwd."""
+    import yago4_spark.pipeline as pl
+
+    write_mini_wikidata(spark, str(tmp_path / "statements"))
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    work = "file://" + str(tmp_path / "work")
+    schema = sample_schema(min_instances=2)
+    first = pl.run_pipeline(spark, str(tmp_path / "statements"), work, schema)
+    n_facts = first.outputs["facts"].count()
+
+    def boom(*a, **k):
+        raise AssertionError("stage was rebuilt despite checkpoint")
+
+    for name in ("build_taxonomy", "build_facts", "build_uri_mapping"):
+        monkeypatch.setattr(pl, name, boom)
+    again = pl.run_pipeline(spark, str(tmp_path / "statements"), work, schema)
+    assert again.outputs["facts"].count() == n_facts
+    assert {m["stage"] for m in again.catalog.metrics()} >= {
+        "uri_mapping", "yago_classes", "facts", "same_as"}
+    assert not (cwd / "file:").exists()

@@ -7,17 +7,28 @@ Reference: ``transitive_closure`` / ``transitive_closure_pair``
 ``filter_redundant_sub_class_of`` (src/plan.rs:617-638) is a one-step
 transitive reduction.
 
+One frontier loop, two commits. Every closure runs :func:`_bfs`; the
+three public entry points differ only in the carried key columns and in
+how each iteration's frontier is committed:
+
+- in memory (``transitive_closure``, ``transitive_closure_pair``):
+  ``localCheckpoint(eager=True)`` + ``count()``;
+- on disk (``transitive_closure_resumable``): the catalog's commit
+  protocol (catalog.commit_parquet: one parquet write with an observed
+  row count, then ``_MANIFEST.json`` as the commit point), so a rerun
+  resumes from the last committed frontier.
+
 Scale notes (100 TB discipline):
 - each iteration joins only the *frontier* (new nodes) against the edge
   table, not the whole visited set — work is proportional to newly
   reached nodes, like BFS;
 - the edge table is cached once and reused every iteration;
-- ONLY the frontier is checkpointed each iteration; the visited set is a
-  plain union over the already-checkpointed frontiers, so every reached
+- ONLY the frontier is committed each iteration; the visited set is a
+  plain union over the already-committed frontiers, so every reached
   node is materialized exactly once. (Re-checkpointing the whole visited
   set per iteration is O(V·depth) block-store writes — at a deep P279
   graph that dominates closure cost.) The union plan stays shallow: its
-  leaves are checkpointed RDDs, so lineage does not accumulate;
+  leaves are committed tables, so lineage does not accumulate;
 - Wikidata P279 has cycles — the ``subtract`` against the visited set is
   what guarantees termination (visited-set BFS does the same);
 - ``max_iterations`` is a safety cap; hitting it raises, because a
@@ -26,9 +37,13 @@ Scale notes (100 TB discipline):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from ..catalog import commit_parquet, is_committed, read_manifest
 
 MAX_ITERATIONS_DEFAULT = 50
 
@@ -38,11 +53,11 @@ MAX_ITERATIONS_DEFAULT = 50
 # exchanges — the previous sort-merge join re-shuffled the edge table
 # on src EVERY iteration, the measured fixed cost behind
 # closure_custkey_tree's volatility (VERDICT r05 What's-wrong #3).
-# Counting the frontier is free: it is localCheckpoint-ed (materialized)
-# right before, and the count doubles as the convergence probe. At a
-# node width of ~8-50 bytes, 4M rows is a <=200 MB broadcast — safe for
-# executors sized per guide §9; genuinely large frontiers (a 100 TB BFS
-# wave) fall back to the shuffle join automatically.
+# Knowing the frontier's size is free: every commit counts it, and the
+# count doubles as the convergence probe. At a node width of ~8-50
+# bytes, 4M rows is a <=200 MB broadcast — safe for executors sized per
+# guide §9; genuinely large frontiers (a 100 TB BFS wave) fall back to
+# the shuffle join automatically.
 BROADCAST_FRONTIER_MAX_ROWS = 4_000_000
 
 # An InSet tier (collect tiny frontiers to the driver, filter edges on
@@ -58,10 +73,64 @@ class ClosureDidNotConverge(RuntimeError):
     pass
 
 
-def _frontier_hint(frontier: DataFrame, n_rows: int,
-                   broadcast_max_rows: int) -> DataFrame:
-    return (F.broadcast(frontier) if n_rows <= broadcast_max_rows
-            else frontier)
+def _named(df: DataFrame, names: list[str]) -> DataFrame:
+    """The first ``len(names)`` columns of ``df``, renamed to ``names``."""
+    return df.select(*[F.col(c).alias(n) for c, n in zip(df.columns, names)])
+
+
+def _in_memory(_: int, frontier: DataFrame) -> tuple[DataFrame, int]:
+    frontier = frontier.localCheckpoint(eager=True)
+    # count on the just-materialized checkpoint: convergence probe +
+    # broadcast-tier choice + trace hook in one parallel job
+    return frontier, frontier.count()
+
+
+def _bfs(
+    seeds: DataFrame,
+    edges: DataFrame,
+    keys: list[str],
+    commit: Callable[[int, DataFrame], tuple[DataFrame, int]],
+    max_iterations: int,
+    on_iteration=None,
+    resume: tuple[int, DataFrame, int, DataFrame] | None = None,
+) -> DataFrame:
+    """The frontier loop. ``seeds`` carries ``keys`` then the node.
+    ``commit(step, frontier)`` returns the committed frontier and its row
+    count; step 0 is the seeds, step i + 1 the frontier iteration i
+    found. ``resume`` = (iteration, frontier, its rows, visited)
+    continues an earlier run instead of committing the seeds."""
+    edges = _named(edges, ["src", "dst"]).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        if resume is None:
+            frontier, n = commit(0, _named(seeds, [*keys, "node"]).distinct())
+            i, visited = 0, frontier
+        else:
+            i, frontier, n, visited = resume
+        while n:
+            if i == max_iterations:
+                raise ClosureDidNotConverge(
+                    f"no fixpoint after {max_iterations} iterations")
+            # the .distinct() is NOT redundant with subtract's dedup:
+            # distinct runs with map-side partial aggregation, collapsing
+            # hub fan-in duplicates BEFORE the shuffle, whereas EXCEPT's
+            # anti-join would shuffle the raw duplicated join output
+            # (measured ~25% slower without it on the sf0.1 custkey tree)
+            f = (F.broadcast(frontier) if n <= BROADCAST_FRONTIER_MAX_ROWS
+                 else frontier)
+            reached = (
+                f.join(edges, f["node"] == edges["src"], "inner")
+                .select(*keys, F.col("dst").alias("node"))
+                .distinct()
+            )
+            frontier, n = commit(i + 1, reached.subtract(visited))
+            if on_iteration is not None:
+                on_iteration(i, n)
+            if n:
+                visited = visited.unionByName(frontier)
+            i += 1
+        return visited
+    finally:
+        edges.unpersist()
 
 
 def transitive_closure(
@@ -69,50 +138,21 @@ def transitive_closure(
     edges: DataFrame,
     max_iterations: int = MAX_ITERATIONS_DEFAULT,
     on_iteration=None,
-    broadcast_max_rows: int = BROADCAST_FRONTIER_MAX_ROWS,
 ) -> DataFrame:
     """All nodes reachable from ``seeds`` (1 col: ``node``) following
     ``edges`` (2 cols: ``src``, ``dst``), seeds included.
+    ``on_iteration(i, n)`` sees each iteration's new-frontier size.
 
     Mirrors src/plan.rs:2252-2268 (which walks key→values of the edge
     multimap: seed node → its edge targets, transitively).
     """
-    seeds = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-    edges = edges.select(
-        F.col(edges.columns[0]).alias("src"), F.col(edges.columns[1]).alias("dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    frontier = seeds.localCheckpoint(eager=True)
-    n_frontier = frontier.count()
-    visited = frontier  # union over checkpointed frontiers, never re-written
-    for i in range(max_iterations):
-        # the .distinct() is NOT redundant with subtract's dedup: distinct
-        # runs with map-side partial aggregation, collapsing hub fan-in
-        # duplicates BEFORE the shuffle, whereas EXCEPT's anti-join would
-        # shuffle the raw duplicated join output (measured ~25% slower
-        # without it on the sf0.1 custkey tree)
-        f = _frontier_hint(frontier, n_frontier, broadcast_max_rows)
-        matched = f.join(edges, f["node"] == edges["src"], "inner")
-        next_nodes = matched.select(F.col("dst").alias("node")).distinct()
-        frontier = next_nodes.subtract(visited).localCheckpoint(eager=True)
-        # count on the just-materialized checkpoint: convergence probe +
-        # broadcast-tier choice + trace hook in one parallel job
-        n_frontier = frontier.count()
-        if on_iteration is not None:
-            on_iteration(i, n_frontier)
-        if n_frontier == 0:
-            edges.unpersist()
-            return visited
-        visited = visited.unionByName(frontier)
-    edges.unpersist()
-    raise ClosureDidNotConverge(f"no fixpoint after {max_iterations} iterations")
+    return _bfs(seeds, edges, [], _in_memory, max_iterations, on_iteration)
 
 
 def transitive_closure_pair(
     pairs: DataFrame,
     edges: DataFrame,
     max_iterations: int = MAX_ITERATIONS_DEFAULT,
-    broadcast_max_rows: int = BROADCAST_FRONTIER_MAX_ROWS,
 ) -> DataFrame:
     """Keyed closure: for each (key, value) pair, emit (key, a) for every
     ancestor ``a`` of ``value`` (value included) via ``edges``.
@@ -120,31 +160,7 @@ def transitive_closure_pair(
     Mirrors src/plan.rs:2272-2299 — used to map each Wikidata class to
     every schema.org ancestor class.
     """
-    pairs = pairs.select(
-        F.col(pairs.columns[0]).alias("key"), F.col(pairs.columns[1]).alias("node")
-    ).distinct()
-    edges = edges.select(
-        F.col(edges.columns[0]).alias("src"), F.col(edges.columns[1]).alias("dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    frontier = pairs.localCheckpoint(eager=True)
-    n_frontier = frontier.count()
-    visited = frontier  # union over checkpointed frontiers (see module doc)
-    for _ in range(max_iterations):
-        f = _frontier_hint(frontier, n_frontier, broadcast_max_rows)
-        next_pairs = (
-            f.join(edges, f["node"] == edges["src"], "inner")
-            .select("key", F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier = next_pairs.subtract(visited).localCheckpoint(eager=True)
-        n_frontier = frontier.count()
-        if n_frontier == 0:
-            edges.unpersist()
-            return visited
-        visited = visited.unionByName(frontier)
-    edges.unpersist()
-    raise ClosureDidNotConverge(f"no fixpoint after {max_iterations} iterations")
+    return _bfs(pairs, edges, ["key"], _in_memory, max_iterations)
 
 
 def transitive_reduction_step(edges: DataFrame) -> DataFrame:
@@ -156,9 +172,7 @@ def transitive_reduction_step(edges: DataFrame) -> DataFrame:
     Expressed as edges ⨝ edges → anti-join: redundant(a,c) = ∃b. (a,b) ∧
     (b,c), then edges ∖ redundant.
     """
-    e = edges.select(
-        F.col(edges.columns[0]).alias("child"), F.col(edges.columns[1]).alias("parent")
-    )
+    e = _named(edges, ["child", "parent"])
     ab = e.alias("ab")
     bc = e.alias("bc")
     redundant = (
@@ -177,98 +191,39 @@ def transitive_closure_resumable(
     max_iterations: int = MAX_ITERATIONS_DEFAULT,
     on_iteration=None,
 ) -> DataFrame:
-    """Disk-checkpointed BFS closure: resumable MID-closure, the north
-    rule's "a failed run resumes mid-taxonomy-closure".
+    """:func:`transitive_closure` with each frontier committed to disk:
+    resumable MID-closure, the north rule's "a failed run resumes
+    mid-taxonomy-closure".
 
-    Every completed iteration commits its frontier to
-    ``<checkpoint_dir>/frontier=<i>`` (parquet write, then an _MANIFEST
-    json as the commit marker — underscore-prefixed so Spark's parquet
-    reader ignores it — a crash between the two leaves an
+    Step ``i`` commits its frontier to ``<checkpoint_dir>/frontier=<i>``
+    (catalog.commit_parquet; a crash before the manifest leaves an
     uncommitted directory that is simply rewritten). A rerun with the
     same directory unions the committed frontiers as the visited set
-    and continues from the LAST committed frontier instead of
-    restarting the whole fixpoint. An empty committed frontier is the
-    converged marker, so a rerun after completion does zero join work.
-
-    Same per-iteration plan as :func:`transitive_closure` (frontier-only
-    join + map-side-combined distinct + subtract); parquet replaces
+    and continues from the LAST committed frontier, whose row count it
+    takes from that frontier's manifest, instead of restarting the
+    fixpoint. An empty committed frontier is the converged marker, so a
+    rerun after completion does zero join work. Parquet replaces
     localCheckpoint as the lineage truncation point, so each iteration
     additionally survives driver loss — this is what the per-stage
     catalog cannot give the closure, whose state lives INSIDE one
     stage build.
     """
-    import json
-
     spark = seeds.sparkSession
-    seeds = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-    edges = edges.select(
-        F.col(edges.columns[0]).alias("src"), F.col(edges.columns[1]).alias("dst")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # the commit marker MUST live on the same filesystem as the parquet
-    # frontiers (ADVICE r4): driver-local os.path against an HDFS/S3
-    # checkpoint_dir would never see the manifest, so resume would
-    # silently restart from scratch. Hadoop's FileSystem API resolves
-    # file:/, hdfs:/, s3a:/ ... exactly like df.write does.
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-
-    def _hpath(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    fs = _hpath(checkpoint_dir).getFileSystem(hconf)
 
     def fdir(i: int) -> str:
         return f"{checkpoint_dir.rstrip('/')}/frontier={i}"
 
-    def committed(i: int) -> bool:
-        return fs.exists(_hpath(f"{fdir(i)}/_MANIFEST.json"))
+    def commit(i: int, frontier: DataFrame) -> tuple[DataFrame, int]:
+        return commit_parquet(frontier, fdir(i), iteration=i)
 
-    def commit(i: int, df: DataFrame) -> tuple[DataFrame, int]:
-        df.write.mode("overwrite").parquet(fdir(i))
-        out = spark.read.parquet(fdir(i))
-        rows = out.count()
-        stream = fs.create(_hpath(f"{fdir(i)}/_MANIFEST.json"), True)
-        try:
-            stream.write(json.dumps({"iteration": i, "rows": rows})
-                         .encode("utf-8"))
-        finally:
-            stream.close()
-        return out, rows
-
-    # resume point: last committed frontier
-    start = 0
-    while committed(start):
-        start += 1
-    if start == 0:
-        frontier, n_frontier = commit(0, seeds)
-        visited = frontier
-        start = 1
-    else:
-        visited = spark.read.parquet(
-            *[fdir(i) for i in range(start)])
-        frontier = spark.read.parquet(fdir(start - 1))
-        n_frontier = frontier.count()
-        if n_frontier == 0:  # previous run already converged
-            edges.unpersist()
-            return visited
-
-    for i in range(start, max_iterations + 1):
-        f = _frontier_hint(frontier, n_frontier,
-                           BROADCAST_FRONTIER_MAX_ROWS)
-        next_nodes = (
-            f.join(edges, f["node"] == edges["src"], "inner")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        frontier, n_frontier = commit(i, next_nodes.subtract(visited))
-        rows = n_frontier
-        if on_iteration is not None:
-            # the commit already counted rows — the trace hook is free
-            on_iteration(i - 1, rows)
-        if rows == 0:
-            edges.unpersist()
-            return visited
-        visited = visited.unionByName(frontier)
-    edges.unpersist()
-    raise ClosureDidNotConverge(f"no fixpoint after {max_iterations} iterations")
+    done = 0
+    while is_committed(spark, fdir(done)):
+        done += 1
+    resume = None
+    if done:
+        last = fdir(done - 1)
+        resume = (done - 1, spark.read.parquet(last),
+                  read_manifest(spark, last)["rows"],
+                  spark.read.parquet(*[fdir(i) for i in range(done)]))
+    return _bfs(seeds, edges, [], commit, max_iterations, on_iteration,
+                resume)

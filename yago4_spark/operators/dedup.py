@@ -492,9 +492,11 @@ def simhash_near_dup_pairs(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
+BROADCAST_LABELS_MAX_ROWS = 2_000_000
+
+
 def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                 max_iterations: int = 40,
-                 broadcast_max_rows: int = 2_000_000) -> DataFrame:
+                 max_iterations: int = 40) -> DataFrame:
     """Connected components over a near-dup pair graph → (doc_id,
     canonical), canonical = MIN doc id in the component. The step a real
     dedup pipeline runs after pair generation: keep ``doc_id ==
@@ -535,14 +537,14 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     )
     # the node set is CONSTANT across rounds (every round relabels the
     # same nodes), so one count up front decides the join strategy for
-    # the whole fixpoint: below ``broadcast_max_rows`` the label table
+    # the whole fixpoint: below BROADCAST_LABELS_MAX_ROWS the label table
     # is broadcast into the propagation and convergence joins (guide
     # §3.1) — the cached edge table then streams with no per-round
     # shuffle (the old sort-merge join re-exchanged edges on src every
     # round), leaving the min-label groupBy as the round's only
     # exchange. Giant graphs fall back to the shuffle join unchanged.
     n_nodes = labels.count()
-    small = n_nodes <= broadcast_max_rows
+    small = n_nodes <= BROADCAST_LABELS_MAX_ROWS
     for _ in range(max_iterations):
         lab = F.broadcast(labels) if small else labels
         prop = edges.join(lab, edges["src"] == lab["node"]).select(
