@@ -27,9 +27,9 @@ def test_bucketed_stmt_join_no_exchange(spark):
     st = StatementsTable.from_table(spark, TABLE)
 
     # entity→statement rows join statement→value rows on stmt identity
-    subj = st.scan_stmt(["p:P569"]).select(
+    subj = st.stmt_scan(["p:P569"]).select(
         "stmt_key", F.col("subject.num").alias("qid"))
-    vals = st.scan_stmt(["psv:P569"]).select(
+    vals = st.stmt_scan(["psv:P569"]).select(
         "stmt_key", F.col("object.text").alias("value_node"))
     joined = subj.hint("merge").join(vals, "stmt_key")
 

@@ -111,21 +111,76 @@ def test_facts_golden(facts_result):
     assert not extra, f"extra {len(extra)}: {sorted(extra)[:8]}"
 
 
-def test_annotated_facts_golden(facts_result):
-    rows = facts_result.annotated.collect()
-    got = {
+def _annotated_set(df):
+    return {
         (
             nt(r["subject"]), nt(r["predicate"]), nt(r["object"]),
             nt(r["annotation_predicate"]) if r["annotation_predicate"] else None,
             nt(r["annotation_object"]) if r["annotation_object"] else None,
         )
-        for r in rows
+        for r in df.collect()
     }
+
+
+def test_annotated_facts_golden(facts_result):
+    got = _annotated_set(facts_result.annotated)
     assert got == {
         (
             f"<{Y}Douglas_Adams>", f"<{S}spouse>", f"<{Y}Dürst_Q2002>",
             f"<{S}startDate>", lit("1991-11-25", X + "date"),
         )
+    }
+
+
+def test_annotation_shapes_empty_and_simple_prefix(spark, tmp_path):
+    """(a) A schema with no annotation shapes builds the facts and an
+    empty RDF★ frame. (b) A string-typed annotation shape reads its
+    qualifier values from pq: (the simple-prefix branch): a string value
+    annotates its fact, a value of another datatype is dropped."""
+    from dataclasses import replace
+
+    from pyspark.sql.types import StructType
+
+    from yago4_spark.fixtures import PQ, mini_wikidata_triples
+    from yago4_spark.plans.shapes import AnnotationShape
+
+    pid = 1932  # "object named as": a string-valued qualifier
+    triples = mini_wikidata_triples() + [
+        (terms.blank("s42death"), terms.prop(pid, PQ), terms.string("DNA")),
+        (terms.blank("s42birth"), terms.prop(pid, PQ), terms.integer(7)),
+    ]
+    row = StructType().add("subject", terms.TERM_SCHEMA) \
+        .add("predicate", terms.TERM_SCHEMA).add("object", terms.TERM_SCHEMA)
+    path = str(tmp_path / "statements")
+    StatementsTable.write(spark.createDataFrame(triples, row), path)
+    st = StatementsTable(spark, path)
+    schema = sample_schema(min_instances=2)
+    # checkpointed like the pipeline's stage commits: a persisted
+    # instances frame keeps its whole taxonomy plan, and the facts plans
+    # over it render multi-hundred-MB explain strings
+    uri = build_uri_mapping(spark, st, schema, YagoSize.FULL).localCheckpoint()
+    tax = build_taxonomy(spark, st, schema, uri, wikidata_to_enwiki_mapping(st))
+    insts = build_shape_instances(spark, st, schema, tax, uri).localCheckpoint()
+
+    bare = build_facts(
+        spark, st, replace(schema, annotation_shapes=[]), insts, uri)
+    assert collect_triples(bare.facts) == EXPECTED_FACTS
+    assert bare.annotated.count() == 0
+
+    named = AnnotationShape(S + "name", (pid,), (vocab.XSD_STRING,))
+    res = build_facts(
+        spark, st,
+        replace(schema, annotation_shapes=[*schema.annotation_shapes, named]),
+        insts, uri)
+    assert _annotated_set(res.annotated) == {
+        (
+            f"<{Y}Douglas_Adams>", f"<{S}spouse>", f"<{Y}Dürst_Q2002>",
+            f"<{S}startDate>", lit("1991-11-25", X + "date"),
+        ),
+        (
+            f"<{Y}Douglas_Adams>", f"<{S}deathDate>",
+            lit("2001-05-11", X + "date"), f"<{S}name>", '"DNA"',
+        ),
     }
 
 

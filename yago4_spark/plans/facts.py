@@ -21,8 +21,12 @@ Shape of the Spark job:
    218-shape config this is 9 branch jobs instead of ~205 sequential
    per-shape jobs (measured 159s → 63s on the mini fixture; the gap
    widens with shape count since each eliminated job is a scheduling
-   barrier); qualifier annotations join on statement id into the RDF★
-   frame (src/plan.rs:1034-1064,1165-1192).
+   barrier).
+3. Annotation shapes go through the same branch dispatch, over the
+   qualifier prefixes pq:/pqv: instead of ps:/psv:, and their values
+   join on statement id into the RDF★ frame
+   (src/plan.rs:1034-1064,1165-1192). There is one value dispatch for
+   both.
 
 Every scan is partition-pruned (predicate partitions only), every
 config-sized side (shape lists) is a broadcast literal.
@@ -34,9 +38,11 @@ Statement/value nodes are keyed by their IRI/blank-node text
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StringType, StructField, StructType
 
 from .. import vocab
 from ..functions.values import (
@@ -49,7 +55,7 @@ from ..functions.values import (
 )
 from ..operators.relational import first_value
 from ..sources.statements import StatementsTable
-from ..terms import term_sort_key_col
+from ..terms import TERM_SCHEMA, term_sort_key_col
 from .shapes import AnnotationShape, PropertyShape, Schema
 
 # --- term-struct column builders -----------------------------------------
@@ -249,133 +255,7 @@ def build_clean_values(st: StatementsTable, uri_mapping: DataFrame) -> CleanValu
     )
 
 
-# --- the statement → object dispatch (plan.rs:1209-1400) -------------------
-
-_DATE_DTS = sorted(
-    [vocab.XSD_DATE, vocab.XSD_DATE_TIME, vocab.XSD_G_YEAR, vocab.XSD_G_YEAR_MONTH]
-)
-
-_PREFIX_KEYS = {
-    "ps": "ps:P", "psv": "psv:P", "pq": "pq:P", "pqv": "pqv:P", "p": "p:P",
-}
-
-
-def _scan_properties(st: StatementsTable, pids: tuple[int, ...],
-                     prefix: str) -> DataFrame:
-    """union of per-predicate scans '{prefix}P{id}' keyed by statement
-    node text (get_triples_from_wikidata_property_relation,
-    src/plan.rs:1441-1466). ``stmt_key`` comes from the scan so a
-    bucketed store's storage partitioning survives to the joins."""
-    keys = [f"{_PREFIX_KEYS[prefix]}{pid}" for pid in pids]
-    return st.stmt_scan(keys).select(
-        "stmt_key", F.col("subject").alias("s"), F.col("object").alias("o")
-    )
-
-
-def statement_objects(
-    st: StatementsTable,
-    schema: Schema,
-    shape: PropertyShape | AnnotationShape,
-    shape_instances: DataFrame,
-    uri_mapping: DataFrame,
-    clean: CleanValues,
-    simple_prefix: str = "ps",
-    complex_prefix: str = "psv",
-) -> DataFrame | None:
-    """(stmt_key, object term, sides array) for one property shape, or
-    None when the shape is ignored (both/neither datatype+node domains,
-    plan.rs:1224-1230,1380-1386)."""
-    dts = sorted(shape.datatypes)
-    nodes = tuple(getattr(shape, "nodes", ()) or ())
-
-    if dts and nodes:
-        return None
-
-    if dts:
-        if dts == [vocab.XSD_ANY_URI]:
-            simple = _scan_properties(st, shape.from_properties, simple_prefix)
-            out = (
-                simple.where(F.col("o.kind") == "iri")
-                .withColumn("url", normalize_url(F.col("o.text")))
-                .where(F.col("url").isNotNull())
-                .select(
-                    "stmt_key",
-                    typed_term(F.col("url"), F.lit(vocab.XSD_ANY_URI)).alias("object"),
-                    no_sides().alias("sides"),
-                )
-            )
-        elif dts == _DATE_DTS:
-            out = _complex_join(st, shape, clean.times, complex_prefix)
-        elif dts == [vocab.XSD_DURATION]:
-            out = _complex_join(st, shape, clean.durations, complex_prefix)
-        elif dts == [vocab.XSD_INTEGER]:
-            out = _complex_join(st, shape, clean.integers, complex_prefix)
-        else:
-            simple = _scan_properties(st, shape.from_properties, simple_prefix)
-            out = simple.where(
-                datatype_of(F.col("o")).isin(dts)
-            ).select(
-                "stmt_key",
-                F.col("o").alias("object"),
-                no_sides().alias("sides"),
-            )
-    elif nodes:
-        expected = [schema.target_class_of(n) for n in nodes]
-        if expected == [vocab.SCHEMA_GEO_COORDINATES]:
-            out = _complex_join(st, shape, clean.coordinates, complex_prefix,
-                                has_sides=True)
-        elif expected == [vocab.SCHEMA_QUANTITATIVE_VALUE]:
-            out = _complex_join(st, shape, clean.quantities, complex_prefix,
-                                has_sides=True)
-        elif expected == [vocab.SCHEMA + "ImageObject"]:
-            simple = _scan_properties(st, shape.from_properties, simple_prefix)
-            out = simple.where(
-                (F.col("o.kind") == "iri")
-                & F.col("o.text").startswith(vocab.COMMONS_FILEPATH_PREFIX)
-            ).select(
-                "stmt_key",
-                F.col("o").alias("object"),
-                no_sides().alias("sides"),
-            )
-        else:
-            simple = _scan_properties(st, shape.from_properties, simple_prefix)
-            mapped = (
-                simple.where(F.col("o.kind") == "item")
-                .select("stmt_key", F.col("o.num").alias("qid"))
-                .join(uri_mapping, "qid", "inner")
-                .select("stmt_key", F.col("yago").alias("obj_uri"))
-            )
-            allowed = shape_instances.where(
-                F.col("shape").isin(expected)
-            ).select(F.col("instance").alias("obj_uri")).distinct()
-            out = mapped.join(allowed, "obj_uri", "left_semi").select(
-                "stmt_key",
-                iri_term(F.col("obj_uri")).alias("object"),
-                no_sides().alias("sides"),
-            )
-    else:
-        return None
-
-    pattern = getattr(shape, "pattern", None)
-    if pattern:
-        out = out.where(
-            (F.col("object.kind") == "string") & F.col("object.text").rlike(pattern)
-        )
-    return out
-
-
-def _complex_join(st: StatementsTable, shape, clean_df: DataFrame,
-                  complex_prefix: str, has_sides: bool = False) -> DataFrame:
-    scan = _scan_properties(st, shape.from_properties, complex_prefix)
-    j = scan.select(
-        "stmt_key", F.col("o.text").alias("node")
-    ).join(clean_df, "node", "inner")
-    if has_sides:
-        return j.select("stmt_key", "object", "sides")
-    return j.select("stmt_key", "object", no_sides().alias("sides"))
-
-
-# --- the per-shape facts assembly (plan.rs:1069-1199) ----------------------
+# --- the facts assembly (plan.rs:1069-1199) -------------------------------
 
 @dataclass
 class FactsResult:
@@ -398,39 +278,6 @@ def best_rank_statements(st: StatementsTable) -> DataFrame:
     )
 
 
-def build_annotations(
-    st: StatementsTable,
-    schema: Schema,
-    shape_instances: DataFrame,
-    uri_mapping: DataFrame,
-    clean: CleanValues,
-) -> DataFrame:
-    """(stmt_key, ann_predicate term, ann_object term, ann_sides) from the
-    annotation property shapes over pq:/pqv: (plan.rs:1034-1064)."""
-    frames = []
-    for ann in schema.annotation_shapes:
-        so = statement_objects(
-            st, schema, ann, shape_instances, uri_mapping, clean,
-            simple_prefix="pq", complex_prefix="pqv",
-        )
-        if so is None:
-            continue
-        frames.append(
-            so.select(
-                "stmt_key",
-                iri_lit(ann.path).alias("ann_predicate"),
-                F.col("object").alias("ann_object"),
-                F.col("sides").alias("ann_sides"),
-            )
-        )
-    if not frames:
-        raise ValueError("no annotation shapes")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
 # --- branch-grouped assembly --------------------------------------------
 #
 # The reference loops its ~205 property shapes sequentially
@@ -441,13 +288,28 @@ def build_annotations(
 # (`sid`) as a column — 9 compact plans instead of 205, with every
 # per-shape constraint (allowed datatypes, allowed object classes,
 # sh:pattern, sh:maxCount, domain class) expressed as a broadcast-joined
-# (sid, value) config table.
+# (sid, value) config table. The annotation shapes take the same
+# dispatch over the qualifier prefixes pq:/pqv: instead of ps:/psv:
+# (plan.rs:1034-1064 calls the one map_wikidata_property_value too).
 
-def _dispatch_branch(schema: Schema, shape: PropertyShape) -> str | None:
-    """Which of the 9 value branches handles this shape (the if-chain in
-    statement_objects / plan.rs:1209-1400); None = shape is ignored."""
+Shape = PropertyShape | AnnotationShape
+
+_DATE_DTS = sorted(
+    [vocab.XSD_DATE, vocab.XSD_DATE_TIME, vocab.XSD_G_YEAR, vocab.XSD_G_YEAR_MONTH]
+)
+
+_PREFIX_KEYS = {
+    "ps": "ps:P", "psv": "psv:P", "pq": "pq:P", "pqv": "pqv:P", "p": "p:P",
+}
+
+
+def _dispatch_branch(schema: Schema, shape: Shape) -> str | None:
+    """Which of the 9 value branches handles this shape (the if-chain of
+    plan.rs:1209-1400); None = shape is ignored (both or neither of
+    datatypes and node classes, plan.rs:1224-1230,1380-1386). Annotation
+    shapes carry no node classes, so they only reach datatype branches."""
     dts = sorted(shape.datatypes)
-    nodes = tuple(shape.nodes or ())
+    nodes = tuple(getattr(shape, "nodes", ()) or ())
     if (dts and nodes) or (not dts and not nodes):
         return None
     if dts:
@@ -476,10 +338,11 @@ def _sid_pairs_df(spark: SparkSession, pairs: list[tuple], schema_str: str
 
 
 def _scan_with_sids(spark: SparkSession, st: StatementsTable,
-                    sid_shapes: list[tuple[int, PropertyShape]],
-                    prefix: str) -> DataFrame | None:
+                    sid_shapes: list[tuple[int, Shape]],
+                    prefix: str) -> DataFrame:
     """One partition-pruned scan over every `{prefix}P{pid}` key of the
-    branch, exploded to (sid, s, o) by the broadcast key→sid config."""
+    branch, exploded to (sid, s, o) by the broadcast key→sid config.
+    Every shape passed here has at least one from_properties PID."""
     # dedupe: a PID repeated inside one shape's from_properties (or a
     # config triple restated across merged files) must not multiply scan
     # rows into duplicate facts / double-counted sh:maxCount groups
@@ -488,8 +351,6 @@ def _scan_with_sids(spark: SparkSession, st: StatementsTable,
         for sid, shape in sid_shapes
         for pid in shape.from_properties
     ))
-    if not pairs:
-        return None
     keys = sorted({k for k, _ in pairs})
     mapping = _sid_pairs_df(spark, pairs, "predicate_key string, sid int")
     return (
@@ -504,13 +365,17 @@ def _branch_objects(
     spark: SparkSession,
     st: StatementsTable,
     branch: str,
-    sid_shapes: list[tuple[int, PropertyShape]],
+    sid_shapes: list[tuple[int, Shape]],
     schema: Schema,
     shape_instances: DataFrame,
     uri_mapping: DataFrame,
     clean: CleanValues,
-) -> DataFrame | None:
-    """(sid, stmt_key, object, sides) for all shapes of one branch."""
+    prefixes: tuple[str, str],
+) -> DataFrame:
+    """(sid, stmt_key, object, sides) for all shapes of one branch.
+    ``prefixes`` = (simple, complex) value prefixes: ("ps", "psv") for
+    statement values, ("pq", "pqv") for qualifier values."""
+    simple_prefix, complex_prefix = prefixes
     complex_tables = {
         "dates": (clean.times, False),
         "duration": (clean.durations, False),
@@ -520,19 +385,14 @@ def _branch_objects(
     }
     if branch in complex_tables:
         clean_df, has_sides = complex_tables[branch]
-        scan = _scan_with_sids(spark, st, sid_shapes, "psv")
-        if scan is None:
-            return None
-        j = scan.select(
+        j = _scan_with_sids(spark, st, sid_shapes, complex_prefix).select(
             "sid", "stmt_key", F.col("o.text").alias("node")
         ).join(clean_df, "node", "inner")
         if has_sides:
             return j.select("sid", "stmt_key", "object", "sides")
         return j.select("sid", "stmt_key", "object", no_sides().alias("sides"))
 
-    scan = _scan_with_sids(spark, st, sid_shapes, "ps")
-    if scan is None:
-        return None
+    scan = _scan_with_sids(spark, st, sid_shapes, simple_prefix)
 
     if branch == "anyuri":
         return (
@@ -599,6 +459,78 @@ def _branch_objects(
     )
 
 
+def _dispatch(
+    spark: SparkSession,
+    st: StatementsTable,
+    schema: Schema,
+    sid_shapes: list[tuple[int, Shape]],
+    shape_instances: DataFrame,
+    uri_mapping: DataFrame,
+    clean: CleanValues,
+    prefixes: tuple[str, str],
+) -> tuple[list[tuple[int, Shape]], DataFrame | None]:
+    """Group (sid, shape) pairs by value branch and run each branch once.
+    Returns the dispatched pairs (in sid order) and the union of their
+    (sid, stmt_key, object, sides) frames — None when no shape with a
+    source PID dispatches."""
+    included: list[tuple[int, Shape]] = []
+    branches: dict[str, list[tuple[int, Shape]]] = {}
+    for sid, shape in sid_shapes:
+        b = _dispatch_branch(schema, shape)
+        if b is None or not shape.from_properties:
+            continue
+        included.append((sid, shape))
+        branches.setdefault(b, []).append((sid, shape))
+    if not included:
+        return included, None
+    frames = [
+        _branch_objects(spark, st, b, pairs, schema, shape_instances,
+                        uri_mapping, clean, prefixes)
+        for b, pairs in branches.items()
+    ]
+    return included, reduce(DataFrame.unionByName, frames)
+
+
+def _empty_frame(spark: SparkSession, **columns: DataType) -> DataFrame:
+    """A zero-row frame with the given columns — what a config with
+    nothing to dispatch yields instead of a crash."""
+    return spark.createDataFrame([], StructType(
+        [StructField(name, dtype) for name, dtype in columns.items()]))
+
+
+def build_annotations(
+    st: StatementsTable,
+    schema: Schema,
+    shape_instances: DataFrame,
+    uri_mapping: DataFrame,
+    clean: CleanValues,
+) -> DataFrame:
+    """(stmt_key, ann_predicate term, ann_object term, ann_sides) from the
+    annotation property shapes over pq:/pqv: (plan.rs:1034-1064), through
+    the same branch dispatch as the facts; ``sid`` indexes
+    ``schema.annotation_shapes``. Empty when no annotation shape
+    dispatches."""
+    spark = st.spark
+    included, objects = _dispatch(
+        spark, st, schema, list(enumerate(schema.annotation_shapes)),
+        shape_instances, uri_mapping, clean, ("pq", "pqv"),
+    )
+    if objects is None:
+        return _empty_frame(
+            spark, stmt_key=StringType(), ann_predicate=TERM_SCHEMA,
+            ann_object=TERM_SCHEMA, ann_sides=DataType.fromDDL(_EMPTY_SIDES),
+        )
+    paths = _sid_pairs_df(
+        spark, [(sid, a.path) for sid, a in included], "sid int, path string"
+    )
+    return objects.join(paths, "sid").select(
+        "stmt_key",
+        iri_term(F.col("path")).alias("ann_predicate"),
+        F.col("object").alias("ann_object"),
+        F.col("sides").alias("ann_sides"),
+    )
+
+
 def build_facts(
     spark: SparkSession,
     st: StatementsTable,
@@ -614,34 +546,23 @@ def build_facts(
     ).persist()
     shape_instances = shape_instances.persist()
 
-    # group shapes by dispatch branch
-    included: list[tuple[int, PropertyShape]] = []
-    branches: dict[str, list[tuple[int, PropertyShape]]] = {}
-    for sid, shape in enumerate(schema.property_shapes):
-        if shape.path in exclude_properties or not shape.from_properties:
-            continue
-        b = _dispatch_branch(schema, shape)
-        if b is None:
-            continue
-        included.append((sid, shape))
-        branches.setdefault(b, []).append((sid, shape))
-
-    if not included:
+    included, objects = _dispatch(
+        spark, st, schema,
+        [(sid, s) for sid, s in enumerate(schema.property_shapes)
+         if s.path not in exclude_properties],
+        shape_instances, uri_mapping, clean, ("ps", "psv"),
+    )
+    if objects is None:
         # e.g. a config whose property shapes are all from_predicates-only
         # (labels output) or all excluded — emit empty frames, not a crash
-        from .. import terms as _terms
-        from pyspark.sql.types import StructField, StructType
-
-        t = _terms.TERM_SCHEMA
-        empty_facts = spark.createDataFrame([], StructType([
-            StructField("subject", t), StructField("predicate", t),
-            StructField("object", t)]))
-        empty_ann = spark.createDataFrame([], StructType([
-            StructField("subject", t), StructField("predicate", t),
-            StructField("object", t),
-            StructField("annotation_predicate", t),
-            StructField("annotation_object", t)]))
-        return FactsResult(facts=empty_facts, annotated=empty_ann)
+        t = TERM_SCHEMA
+        return FactsResult(
+            facts=_empty_frame(spark, subject=t, predicate=t, object=t),
+            annotated=_empty_frame(
+                spark, subject=t, predicate=t, object=t,
+                annotation_predicate=t, annotation_object=t,
+            ),
+        )
 
     # shared subject side: ONE p:P{...} scan for every included shape,
     # best-rank gated, URI-mapped, domain-checked against the shape's
@@ -666,17 +587,6 @@ def build_facts(
             "left_semi",
         )
     )
-
-    branch_frames = []
-    for b, sid_shapes in branches.items():
-        so = _branch_objects(
-            spark, st, b, sid_shapes, schema, shape_instances, uri_mapping, clean
-        )
-        if so is not None:
-            branch_frames.append(so)
-    objects = branch_frames[0]
-    for f in branch_frames[1:]:
-        objects = objects.unionByName(f)
 
     # sh:pattern (plan.rs:1127-1139): literal-string regex per shape
     pat_pairs = [(sid, s.pattern) for sid, s in included if s.pattern]

@@ -12,17 +12,21 @@ columns).
 Scan API parity:
 - subjects_objects_for_predicate  (:39-48)  → ``scan``
 - objects_for_subject_predicate   (:50-61)  → ``scan`` + join by caller
-- object_for_subject_predicate    (:63-70)  → ``first_object`` (min-by
-  canonical term order — deterministic where the reference inherits
-  RocksDB byte order; documented divergence SURVEY §7.4.2)
+- object_for_subject_predicate    (:63-70)  → ``scan`` +
+  ``relational.first_value`` by caller (min by canonical term order —
+  deterministic where the reference inherits RocksDB byte order;
+  documented divergence SURVEY §7.4.2)
 - contains                        (:72-78)  → left-semi join by caller
+
+The facts pipeline's multi-predicate statement scans
+(get_triples_from_wikidata_property_relation, src/plan.rs:1441-1466)
+go through ``stmt_scan``, on a plain and a bucketed store alike.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .. import terms
 
@@ -97,18 +101,6 @@ class StatementsTable:
             .select("subject", "object")
         )
 
-    def scan_stmt(self, predicate_keys: list[str]) -> DataFrame:
-        """(stmt_key, predicate_key, subject, object) from a bucketed
-        table (:meth:`write_bucketed`): joins on ``stmt_key`` between two
-        such scans are storage-partitioned — no Exchange."""
-        assert "stmt_key" in self.df().columns, (
-            "scan_stmt requires a write_bucketed table")
-        return (
-            self.df()
-            .where(F.col("predicate_key").isin(predicate_keys))
-            .select("stmt_key", "predicate_key", "subject", "object")
-        )
-
     def stmt_scan(self, predicate_keys: list[str]) -> DataFrame:
         """(predicate_key, stmt_key, subject, object) — the facts
         pipeline's scan. On a :meth:`write_bucketed` store the stored
@@ -127,17 +119,4 @@ class StatementsTable:
             self.df()
             .where(F.col("predicate_key").isin(predicate_keys))
             .select("predicate_key", "subject", "object")
-        )
-
-    def first_object(self, predicate_key: str) -> DataFrame:
-        """One object per subject, deterministic (min by canonical term
-        order). Replaces the reference's arbitrary-but-stable .next() pick."""
-        w = Window.partitionBy("subject").orderBy(
-            terms.term_sort_key_col(F.col("object"))
-        )
-        return (
-            self.scan(predicate_key)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
         )
