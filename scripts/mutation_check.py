@@ -161,6 +161,13 @@ MUTATIONS = [
         new="    sub_class_of = sub_class_of_full.persist()",
         expect="sub_class_of (redundant transitive edges kept)",
     ),
+    dict(
+        name="mapped_subtree_roots_only",
+        file="yago4_spark/plans/taxonomy.py",
+        old='    mapped_subtree = desc.select("node")',
+        new='    mapped_subtree = desc.where(F.col("key") == F.col("node")).select("node")',
+        expect="yago_classes (mapped classes' descendants lost)",
+    ),
 ]
 
 _WORKER = '''\

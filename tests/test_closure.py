@@ -65,15 +65,19 @@ def test_transitive_reduction_step(spark):
     assert got == {("a", "b"), ("b", "c")}
 
 
-def test_resumable_closure_equivalence_and_resume(spark, tmp_path):
-    """transitive_closure_resumable == transitive_closure on the same
-    graph; after an interrupted run (iteration cap hit mid-closure) a
+@pytest.mark.parametrize("keyed", [False, True], ids=["node", "key_node"])
+def test_resumable_closure_equivalence_and_resume(spark, tmp_path, keyed):
+    """transitive_closure_resumable == its in-memory twin on the same
+    graph (transitive_closure for ``node`` seeds, transitive_closure_pair
+    for keyed ``(key, node)`` seeds, whose key column must be carried);
+    after an interrupted run (iteration cap hit mid-closure) a
     rerun RESUMES from the committed frontiers — the already-done
     iterations are not recomputed (their _MANIFEST files are untouched)
     — and completes to the identical result. A third run after
     convergence does zero join work (returns from the committed state).
-    Both commits report the same (iteration, frontier size) sequence:
-    the disk one across the interrupted run and its resume.
+    The disk commit reports the expected (iteration, frontier size)
+    sequence across the interrupted run and its resume; for ``node``
+    seeds the in-memory commit reports the same one.
     """
     import json
     import os
@@ -87,11 +91,23 @@ def test_resumable_closure_equivalence_and_resume(spark, tmp_path):
     # chain 0→1→...→9 plus a cycle 9→4: depth 10, cycle-safe
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(9)] + [(9, 4)], "src long, dst long")
-    seeds = spark.createDataFrame([(0,)], "node long")
-    in_memory, on_disk = [], []
-    expect = {r["node"] for r in transitive_closure(
-        seeds, edges,
-        on_iteration=lambda i, n: in_memory.append((i, n))).collect()}
+    if keyed:
+        # key 2 starts on the cycle 4→…→9→4, so its walk ends after five
+        # iterations while key 1's runs all ten
+        seeds = spark.createDataFrame([(1, 0), (2, 5)], "key long, node long")
+        steps = ([(i, 2) for i in range(5)] + [(i, 1) for i in range(5, 9)]
+                 + [(9, 0)])
+        expect = {tuple(r) for r in
+                  transitive_closure_pair(seeds, edges).collect()}
+    else:
+        seeds = spark.createDataFrame([(0,)], "node long")
+        steps = [(i, 1) for i in range(9)] + [(9, 0)]
+        in_memory = []
+        expect = {tuple(r) for r in transitive_closure(
+            seeds, edges,
+            on_iteration=lambda i, n: in_memory.append((i, n))).collect()}
+        assert in_memory == steps
+    on_disk = []
 
     ckpt = str(tmp_path / "closure")
     # "crash" after 4 committed iterations (cap acts as the crash)
@@ -107,11 +123,12 @@ def test_resumable_closure_equivalence_and_resume(spark, tmp_path):
     mtimes = {d: os.path.getmtime(os.path.join(ckpt, d, "_MANIFEST.json"))
               for d in done}
 
-    got = {r["node"] for r in transitive_closure_resumable(
+    resumed = transitive_closure_resumable(
         seeds, edges, ckpt,
-        on_iteration=lambda i, n: on_disk.append((i, n))).collect()}
-    assert got == expect
-    assert on_disk == in_memory == [(i, 1) for i in range(9)] + [(9, 0)]
+        on_iteration=lambda i, n: on_disk.append((i, n)))
+    assert resumed.columns == seeds.columns
+    assert {tuple(r) for r in resumed.collect()} == expect
+    assert on_disk == steps
     # the pre-crash iterations were NOT recomputed
     for d in done:
         assert os.path.getmtime(
@@ -120,9 +137,9 @@ def test_resumable_closure_equivalence_and_resume(spark, tmp_path):
     # post-convergence rerun: converged marker (empty frontier) short-
     # circuits; result identical, no new iteration dirs
     n_dirs = len(os.listdir(ckpt))
-    again = {r["node"] for r in
+    again = {tuple(r) for r in
              transitive_closure_resumable(seeds, edges, ckpt).collect()}
     assert again == expect
     assert len(os.listdir(ckpt)) == n_dirs
     with open(os.path.join(ckpt, "frontier=0", "_MANIFEST.json")) as f:
-        assert json.load(f)["rows"] == 1
+        assert json.load(f)["rows"] == seeds.count()

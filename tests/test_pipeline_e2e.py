@@ -4,6 +4,8 @@ rebuilds). The per-output rules cite src/plan.rs in plans/outputs.py."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from yago4_spark import terms, vocab
@@ -106,6 +108,9 @@ def test_resume_skips_rebuild(result, spark, tmp_path_factory):
     stages = [m["stage"] for m in cat.metrics()]
     for required in ("uri_mapping", "yago_classes", "facts", "same_as"):
         assert required in stages
+    # the taxonomy commits two walks: the bad-class subtree and the one
+    # keyed walk down from the mapped classes
+    assert sorted(os.listdir(f"{cat.root}/closure")) == ["bad", "desc"]
     # all stages committed → a second run must read, not rebuild
     import yago4_spark.pipeline as pl
 

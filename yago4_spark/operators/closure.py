@@ -195,6 +195,9 @@ def transitive_closure_resumable(
     resumable MID-closure, the north rule's "a failed run resumes
     mid-taxonomy-closure".
 
+    The seed frame's last column is the node and its leading columns are
+    carried as keys, as in :func:`transitive_closure_pair`.
+
     Step ``i`` commits its frontier to ``<checkpoint_dir>/frontier=<i>``
     (catalog.commit_parquet; a crash before the manifest leaves an
     uncommitted directory that is simply rewritten). A rerun with the
@@ -225,5 +228,5 @@ def transitive_closure_resumable(
         resume = (done - 1, spark.read.parquet(last),
                   read_manifest(spark, last)["rows"],
                   spark.read.parquet(*[fdir(i) for i in range(done)]))
-    return _bfs(seeds, edges, [], commit, max_iterations, on_iteration,
-                resume)
+    return _bfs(seeds, edges, seeds.columns[:-1], commit, max_iterations,
+                on_iteration, resume)

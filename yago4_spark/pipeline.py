@@ -96,7 +96,6 @@ def run_pipeline(
         yago_classes=cat.read("yago_classes").persist(),
         class_mapping=cat.read("class_mapping").persist(),
         sub_class_of=cat.read("sub_class_of").persist(),
-        super_class_of=cat.read("sub_class_of").select("parent", "child"),
     )
 
     shape_instances = cat.get_or_create(

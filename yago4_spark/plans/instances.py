@@ -48,7 +48,7 @@ def build_shape_instances(
         [(ns.target_class, ns.target_class) for ns in schema.node_shapes],
         "key string, node string",
     )
-    down = taxonomy.super_class_of.select(
+    down = taxonomy.sub_class_of.select(
         F.col("parent").alias("src"), F.col("child").alias("dst")
     )
     shape_subtree = transitive_closure_pair(shape_seeds, down)  # (shape, cls)

@@ -11,9 +11,10 @@ hierarchy (each kept class attaches DIRECTLY under its mapped schema.org
 ancestors — YAGO 4's taxonomy is deliberately flat below schema.org) and
 the wd→yago class mapping (most-specific mapped class wins).
 
-All closures are iterative DataFrame self-joins on long QID keys; the
-P31 instance count is the skew hub (Q5-scale classes) and uses the
-salted two-phase aggregation.
+All closures are iterative DataFrame self-joins on long QID keys; one
+walk keyed by mapped class serves steps 2 and 5. The P31 instance count
+is the skew hub (Q5-scale classes) and uses the salted two-phase
+aggregation.
 """
 
 from __future__ import annotations
@@ -37,8 +38,7 @@ from .shapes import Schema
 class Taxonomy:
     yago_classes: DataFrame          # (cls) yago/schema class IRIs
     class_mapping: DataFrame         # (qid, cls) wd class → yago class IRI
-    super_class_of: DataFrame        # (parent, child) class IRIs, reduced
-    sub_class_of: DataFrame          # (child, parent) same edges
+    sub_class_of: DataFrame          # (child, parent) class IRIs, reduced
 
 
 def sub_class_edges(st: StatementsTable) -> DataFrame:
@@ -69,16 +69,14 @@ def _qids_df(spark: SparkSession, qids: list[int], col: str = "node") -> DataFra
     return spark.createDataFrame([(int(q),) for q in qids], f"{col} long")
 
 
-def most_specific_filter(mapping: DataFrame, super_class_of: DataFrame,
+def most_specific_filter(mapping: DataFrame, sub_class_of: DataFrame,
                          key: str, value: str) -> DataFrame:
     """Drop (k, c) when k also maps to a DIRECT child of c in the reduced
     hierarchy — keep the most specific mapped classes
     (filter_redundant_sub_class_of applied to the class mapping,
     src/plan.rs:589-607,616-638)."""
-    sco = super_class_of.select(
-        F.col(super_class_of.columns[0]).alias("_p"),
-        F.col(super_class_of.columns[1]).alias("_c"),
-    )
+    sco = sub_class_of.select(F.col("parent").alias("_p"),
+                              F.col("child").alias("_c"))
     redundant = (
         mapping.alias("m1")
         .join(sco, F.col(f"m1.{value}") == F.col("_p"), "inner")
@@ -103,12 +101,13 @@ def build_taxonomy(
     closure_dir: str | None = None,
 ) -> Taxonomy:
     """``closure_dir`` (north rule: "a failed run resumes
-    mid-taxonomy-closure"): when set, the two unbounded-depth closures
-    (bad-class subtree, mapped subtree) checkpoint each iteration's
-    frontier to disk under it and a rerun resumes from the last
-    committed iteration instead of restarting the fixpoint. The caller
-    owns the same freshness contract as the stage catalog: a reused
-    work dir implies unchanged input statements."""
+    mid-taxonomy-closure"): when set, the two downward closures
+    (bad-class subtree under ``bad``, the keyed mapped-class subtree
+    under ``desc``) checkpoint each iteration's frontier to disk under
+    it and a rerun resumes from the last committed iteration instead of
+    restarting the fixpoint. The caller owns the same freshness contract
+    as the stage catalog: a reused work dir implies unchanged input
+    statements."""
     from_classes = schema.mapped_class_qids()
     from_classes_df = F.broadcast(_qids_df(spark, from_classes, "qid"))
 
@@ -126,29 +125,26 @@ def build_taxonomy(
 
     p31 = instance_edges(st)
 
+    # (key=from_class qid, node=descendant qid incl. self): the node
+    # column is the mapped subtree
+    desc_seeds = _qids_df(spark, from_classes, "key").select(
+        "key", F.col("key").alias("node"))
     if closure_dir is not None:
         from ..operators.closure import transitive_closure_resumable
 
         bad = transitive_closure_resumable(
             _qids_df(spark, vocab.WD_BAD_CLASSES), down_edges,
             f"{closure_dir}/bad")
-        mapped_subtree = transitive_closure_resumable(
-            _qids_df(spark, from_classes), down_edges,
-            f"{closure_dir}/mapped_subtree")
+        desc = transitive_closure_resumable(
+            desc_seeds, down_edges, f"{closure_dir}/desc")
     else:
         bad = transitive_closure(_qids_df(spark, vocab.WD_BAD_CLASSES),
                                  down_edges)
-        mapped_subtree = transitive_closure(
-            _qids_df(spark, from_classes), down_edges
-        )
+        desc = transitive_closure_pair(desc_seeds, down_edges)
+    mapped_subtree = desc.select("node")
 
     # subclasses under a disjoint schema pair: descendants(c1) ∩
     # descendants(c2) for every disjoint (c1, c2) (plan.rs:486-508).
-    # One keyed closure for all from-classes, intersected per pair.
-    desc = transitive_closure_pair(
-        _qids_df(spark, from_classes, "key").select("key", F.col("key").alias("node")),
-        down_edges,
-    )  # (key=from_class qid, node=descendant qid incl. self)
     disjoint_nodes = None
     for c1, c2 in schema.disjoint:
         q1 = schema.node_shape(c1).from_classes
@@ -214,9 +210,6 @@ def build_taxonomy(
     from ..operators.closure import transitive_reduction_step
 
     sub_class_of = transitive_reduction_step(sub_class_of_full).persist()
-    super_class_of = sub_class_of.select(
-        F.col("parent"), F.col("child")
-    )
 
     # --- wd → yago class mapping (plan.rs:586-607) ---
     identity = kept_for_yago.select(
@@ -237,7 +230,7 @@ def build_taxonomy(
         .distinct()
     )
     class_mapping = most_specific_filter(
-        class_mapping, super_class_of, "qid", "cls"
+        class_mapping, sub_class_of, "qid", "cls"
     ).persist()
 
     yago_classes = (
@@ -251,6 +244,5 @@ def build_taxonomy(
     return Taxonomy(
         yago_classes=yago_classes,
         class_mapping=class_mapping,
-        super_class_of=super_class_of,
         sub_class_of=sub_class_of,
     )
